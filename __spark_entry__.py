@@ -509,7 +509,7 @@ def _q_jk_cox_refits(spark: SparkSession, sf_dir: str) -> DataFrame:
             batch["t"].to_numpy(),
             batch["d"].to_numpy(dtype=float),
             batch["wt"].to_numpy(),
-        )
+        ).beta
         return pd.DataFrame(
             {
                 "replicate": [int(batch["replicate"].iloc[0])],

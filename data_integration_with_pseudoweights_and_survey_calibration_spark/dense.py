@@ -1,46 +1,122 @@
 """Dense (single-partition) NumPy model fits.
 
-Two uses:
+Three uses:
 1. the grouped-map jackknife path (SURVEY §2 I22): each leave-group-out
    replicate fits comfortably in one pandas batch, so the 90-replicate
    x 17-method refit storm runs as ONE ``applyInPandas`` job instead of
    90 driver-orchestrated Newton loops;
-2. independent golden references for the distributed fits in tests.
+2. the driver route of ``cox_fit`` and ``weighted_logistic``: a sample
+   of at most ``DRIVER_FIT_ROWS`` rows is collected once
+   (``collect_small``) and the whole Newton/IRLS loop runs here, on the
+   driver, instead of one Spark job per step.  The reference fits
+   ``coxph``/``svyglm`` in memory on samples of 300-900 rows; on 600
+   rows a 3-covariate Cox fit takes 0.18 s this way (collect included)
+   against 3.6 s as distributed Newton passes.  The crossover lies
+   above the cutoff (see ``DRIVER_FIT_ROWS``);
+3. independent golden references for the distributed fits in tests.
 
 Semantics mirror the distributed operators exactly: weighted IRLS
-logistic (operators/glm.py) and weighted Breslow-ties Cox
-(operators/cox.py). Keep the two in lockstep.
+logistic with glm.fit's start and clamps (operators/glm.py) and
+weighted Breslow-ties Cox (operators/cox.py), the same start values,
+convergence rules and ``linalg.solve_sym`` solves.  Keep the two in
+lockstep: ``tests/test_driver_route.py`` forces each route on the same
+data and asserts they agree to 1e-10.
 """
 
 from __future__ import annotations
 
+from typing import NamedTuple, Sequence
+
 import numpy as np
+
+from .linalg import solve_sym, vec_to_sym
+
+# Largest sample (rows after projection) that ``cox_fit`` and
+# ``weighted_logistic`` fit on the driver; above it the distributed
+# Newton/IRLS loop runs.  One bounded ``limit(cutoff + 1)`` collect
+# decides.  Measured on local[4] (3-covariate Cox, 4-column logistic,
+# 5 iterations each, collect included): at 50,000 rows the driver fits
+# take 0.43 s (Cox) and 0.36 s (logistic) against 3.6 s and 1.3 s
+# distributed; at 200,000 rows logistic is even (1.3 s vs 1.2 s) and
+# Cox still 3.5x faster on the driver.  The cutoff sits below both
+# crossovers and bounds what the driver holds (a few MB of doubles).
+DRIVER_FIT_ROWS = 50_000
+
+NO_EVENTS = (
+    "cox_fit: the sample has no events (every row censored or every "
+    "event weight 0); the partial likelihood has no information"
+)
+
+
+class DenseFit(NamedTuple):
+    """A NumPy fit; ``hessian``/``score_norm`` are set by ``dense_cox``."""
+
+    beta: np.ndarray
+    n_iter: int
+    converged: bool
+    hessian: np.ndarray | None = None  # observed information at beta
+    score_norm: float = float("nan")  # sum |U(beta)| at beta
+
+
+def collect_small(df) -> np.ndarray | None:
+    """``df``'s rows as an (n, columns) float matrix when it has at most
+    ``DRIVER_FIT_ROWS`` rows, else None -- one bounded job either way.
+    NULL reads as NaN."""
+    cutoff = DRIVER_FIT_ROWS  # read at call time so tests can lower it
+    # coalesce(1): one task reads the partitions in turn and stops at
+    # cutoff + 1 rows, so the take is ONE job; a bare limit scales its
+    # scan up job by job (3 jobs on an 8-partition stacked sample).
+    rows = df.coalesce(1).limit(cutoff + 1).collect()
+    if len(rows) > cutoff:
+        return None
+    # plain tuples: NumPy reads a list of ``Row``s ~25x slower
+    return np.array(list(map(tuple, rows)), dtype=float).reshape(
+        len(rows), len(df.columns)
+    )
 
 
 def dense_logistic(
     x: np.ndarray,
     y: np.ndarray,
-    w: np.ndarray,
+    w: np.ndarray | None = None,
     *,
     max_iter: int = 25,
     tol: float = 1e-10,
-) -> np.ndarray:
-    """Weighted logistic regression via IRLS (Fisher scoring)."""
+    penalty: np.ndarray | None = None,
+) -> DenseFit:
+    """Weighted logistic regression via IRLS (Fisher scoring), the same
+    iteration as ``glm.weighted_logistic``: glm.fit's mustart on the
+    first pass, mu clamped to [1e-12, 1 - 1e-12], optional diagonal L2
+    ``penalty`` added to X'WX, converged when max |delta beta| < tol
+    after the first pass."""
     n, p = x.shape
+    y = np.asarray(y, dtype=float)
+    w = np.ones(n) if w is None else np.asarray(w, dtype=float)
+    lo, hi = 1e-12, 1.0 - 1e-12
     beta = np.zeros(p)
-    for _ in range(max_iter):
-        eta = x @ beta
-        mu = 1.0 / (1.0 + np.exp(-eta))
-        wls = w * mu * (1.0 - mu)
-        z = eta + (y - mu) / np.clip(mu * (1.0 - mu), 1e-12, None)
-        xtwx = x.T @ (wls[:, None] * x)
-        xtwz = x.T @ (wls * z)
-        new = np.linalg.solve(xtwx, xtwz)
-        if np.max(np.abs(new - beta)) < tol:
-            beta = new
+    converged = False
+    it = 0
+    for it in range(1, max_iter + 1):
+        if it == 1:
+            mu = np.clip((w * y + 0.5) / (w + 1.0), lo, hi)
+            eta = np.log(mu / (1.0 - mu))
+        else:
+            eta = x @ beta
+            with np.errstate(over="ignore"):
+                mu = np.clip(1.0 / (1.0 + np.exp(-eta)), lo, hi)
+        wvar = mu * (1.0 - mu)
+        ww = w * wvar
+        z = eta + (y - mu) / wvar
+        xtwx = x.T @ (ww[:, None] * x)
+        if penalty is not None:
+            xtwx = xtwx + np.diag(penalty)
+        new_beta = solve_sym(xtwx, x.T @ (ww * z))
+        delta = float(np.max(np.abs(new_beta - beta)))
+        beta = new_beta
+        if it > 1 and delta < tol:
+            converged = True
             break
-        beta = new
-    return beta
+    return DenseFit(beta, it, converged)
 
 
 def dense_cox(
@@ -51,44 +127,58 @@ def dense_cox(
     *,
     max_iter: int = 25,
     tol: float = 1e-9,
-) -> np.ndarray:
+    init: Sequence[float] | None = None,
+) -> DenseFit:
     """Weighted Cox PH, Breslow ties, Newton-Raphson.
 
-    Same estimating equations as ``operators/cox.py`` (grid S0/S1/S2
-    with tie groups sharing the full tie-group risk set).
+    Same estimating equations and loop as ``operators/cox.py``: grid
+    S0/S1/S2 with tie groups sharing the full tie-group risk set, a
+    Newton step per pass until max |step| < tol, then U and H at the
+    solution.  Raises ``ValueError`` when no row carries event weight.
     """
-    n, p = x.shape
-    order = np.argsort(t, kind="stable")
-    xo, to, do_, wo = x[order], t[order], d[order].astype(float), w[order]
-    uniq_t, inv = np.unique(to, return_inverse=True)
+    x = np.asarray(x, dtype=float)
+    p = x.shape[1]
+    w = np.asarray(w, dtype=float)
+    wd = w * np.asarray(d, dtype=float)
+    uniq_t, inv = np.unique(t, return_inverse=True)
     n_t = len(uniq_t)
-    beta = np.zeros(p)
-    for _ in range(max_iter):
-        rel = np.exp(xo @ beta)
-        we = wo * rel
-        # per-distinct-time partials
-        s0p = np.zeros(n_t)
-        s1p = np.zeros((n_t, p))
-        s2p = np.zeros((n_t, p, p))
-        du = np.zeros(n_t)
-        dx = np.zeros((n_t, p))
-        np.add.at(s0p, inv, we)
-        np.add.at(s1p, inv, we[:, None] * xo)
-        np.add.at(s2p, inv, we[:, None, None] * (xo[:, :, None] * xo[:, None, :]))
-        np.add.at(du, inv, wo * do_)
-        np.add.at(dx, inv, (wo * do_)[:, None] * xo)
-        # reverse cumsums over the grid
-        s0 = np.cumsum(s0p[::-1])[::-1]
-        s1 = np.cumsum(s1p[::-1], axis=0)[::-1]
-        s2 = np.cumsum(s2p[::-1], axis=0)[::-1]
-        ev = du > 0
-        u = dx[ev].sum(axis=0) - (du[ev, None] * s1[ev] / s0[ev, None]).sum(axis=0)
-        h1 = (du[ev, None, None] * s2[ev] / s0[ev, None, None]).sum(axis=0)
-        ratio = s1[ev] / s0[ev, None]
-        h2 = (du[ev, None, None] * (ratio[:, :, None] * ratio[:, None, :])).sum(axis=0)
-        hess = h1 - h2
-        step = np.linalg.solve(hess, u)
+
+    def per_time(cols: np.ndarray) -> np.ndarray:
+        return np.stack(
+            [np.bincount(inv, c, minlength=n_t) for c in cols.T], axis=1
+        )
+
+    # beta-invariant event partials D_u and Dx_u, event times only
+    dpart = per_time(np.column_stack([wd, wd[:, None] * x]))
+    ev = dpart[:, 0] > 0
+    if not ev.any():
+        raise ValueError(NO_EVENTS)
+    du, dx = dpart[ev, 0], dpart[ev, 1:]
+    iu, ju = np.triu_indices(p)
+    xx = x[:, iu] * x[:, ju]  # upper-triangle products, row-major
+
+    def score_hessian(beta: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        we = w * np.exp(x @ beta)
+        part = per_time(np.column_stack([we, we[:, None] * x, we[:, None] * xx]))
+        # reverse cumsums over the grid, kept at event times
+        cum = np.cumsum(part[::-1], axis=0)[::-1][ev]
+        s0, s1, s2 = cum[:, 0], cum[:, 1 : 1 + p], cum[:, 1 + p :]
+        u = (dx - du[:, None] * s1 / s0[:, None]).sum(axis=0)
+        h = (
+            du[:, None]
+            * (s2 / s0[:, None] - s1[:, iu] * s1[:, ju] / (s0 * s0)[:, None])
+        ).sum(axis=0)
+        return u, vec_to_sym(h, p)
+
+    beta = np.zeros(p) if init is None else np.asarray(init, dtype=float)
+    converged = False
+    it = 0
+    for it in range(1, max_iter + 1):
+        u, h = score_hessian(beta)
+        step = solve_sym(h, u)
         beta = beta + step
-        if np.max(np.abs(step)) < tol:
+        if float(np.max(np.abs(step))) < tol:
+            converged = True
             break
-    return beta
+    u, h = score_hessian(beta)
+    return DenseFit(beta, it, converged, h, float(np.abs(u).sum()))

@@ -188,7 +188,7 @@ def _dense_calib_est(
     vw = com[var_wt].to_numpy(dtype=float)
     at = com[aux_t].to_numpy(dtype=float)
     ad = com[aux_d].to_numpy(dtype=float)
-    beta_aux = dense_cox(xs, at, ad, vw)
+    beta_aux = dense_cox(xs, at, ad, vw).beta
     rel = np.exp(xs @ beta_aux)
     beta_pw = _dense_cox_influence(xs, at, ad, vw, beta_aux)
     trr = at * rel
@@ -210,7 +210,7 @@ def _dense_calib_est(
     bench_l = [float(pop_size), float(pop_events), t_rr_tot]
     calib_lamd = _clamp(startwt * _dense_greg(startwt, aux_l, bench_l))
 
-    beta_refit = dense_cox(xc, t_true, d_true, calibwt_rr)
+    beta_refit = dense_cox(xc, t_true, d_true, calibwt_rr).beta
     rel2 = np.exp(xc @ beta_refit)
     Lam = _dense_breslow(t_true, d_true, calib_lamd, rel2, t_star)
     LamG = absR = absRG = None
@@ -294,7 +294,7 @@ def estimate_methods_np(
             pdf[tc].to_numpy(dtype=float),
             pdf[dc].to_numpy(dtype=float),
             w,
-        )
+        ).beta
         for name, b in zip(x_cols, beta):
             results[f"beta_{label}_{name}"] = float(b)
         for k, v in _est_out(pdf, beta, w, tc, dc).items():
@@ -317,7 +317,7 @@ def estimate_methods_np(
 
     # propensity: trt ~ ps_formula weighted by w_s; ipsw = (1-p)/(p a)
     xd, _ = _design_np(com, ps_formula)
-    gamma = dense_logistic(xd, trt.astype(float), w_s)
+    gamma = dense_logistic(xd, trt.astype(float), w_s).beta
     p_est = 1.0 / (1.0 + np.exp(-(xd @ gamma)))
     ipsw_all = (1.0 - p_est) / (p_est * a)
     ipsw = ipsw_all[trt == 1]
@@ -442,7 +442,7 @@ def estimate_methods_inf_np(
             pdf[tc].to_numpy(dtype=float),
             pdf[dc].to_numpy(dtype=float),
             w,
-        )
+        ).beta
         for name, b in zip(x_cols, beta):
             results[f"beta_{label}_{name}"] = float(b)
         for k, v in _est_out(pdf, beta, w, tc, dc).items():
@@ -471,7 +471,7 @@ def estimate_methods_inf_np(
     cohort_v = com[trt == 1].reset_index(drop=True)
     for i, fm in enumerate(ps_formulas):
         xd, _ = _design_np(com, fm)
-        gamma = dense_logistic(xd, trt.astype(float), w_s)
+        gamma = dense_logistic(xd, trt.astype(float), w_s).beta
         p_est = 1.0 / (1.0 + np.exp(-(xd @ gamma)))
         ipsw = ((1.0 - p_est) / (p_est * a))[trt == 1]
         _cox_and_est(cohort_v, ipsw, f"ipsw.{i}")

@@ -20,3 +20,12 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
+
+
+@pytest.fixture
+def distributed(monkeypatch):
+    """Force ``cox_fit``/``weighted_logistic`` onto the distributed
+    Newton/IRLS loop by lowering the driver-route cutoff to 0 rows."""
+    from data_integration_with_pseudoweights_and_survey_calibration_spark import dense
+
+    monkeypatch.setattr(dense, "DRIVER_FIT_ROWS", 0)

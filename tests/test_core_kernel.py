@@ -118,6 +118,11 @@ def test_weighted_logistic_irls(spark):
     np.testing.assert_allclose([r["mu"] for r in got], 1 / (1 + np.exp(-eta)), rtol=1e-9)
 
 
+def test_weighted_logistic_irls_distributed(spark, distributed):
+    """The same golden on the distributed IRLS loop."""
+    test_weighted_logistic_irls(spark)
+
+
 def test_weighted_logistic_ridge_golden(spark):
     """Ridge IRLS (round 5) vs the dense mirror: same update with
     lambda*I added to the Gram, intercept unpenalized; ridge=0 must
@@ -158,6 +163,11 @@ def test_weighted_logistic_ridge_golden(spark):
     # ridge=0 path unchanged
     fit0 = weighted_logistic(df2, cols, "y", "w", ridge=0.0)
     np.testing.assert_allclose(fit0.beta, mle.beta, atol=1e-12)
+
+
+def test_weighted_logistic_ridge_golden_distributed(spark, distributed):
+    """The same golden on the distributed IRLS loop."""
+    test_weighted_logistic_ridge_golden(spark)
 
 
 def test_weighted_linear_closed_form(spark):

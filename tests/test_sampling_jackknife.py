@@ -165,7 +165,7 @@ def test_jk_refit_grouped_cox_matches_dense(spark):
             batch["t"].to_numpy(),
             batch["d"].to_numpy(),
             batch["w"].to_numpy(),
-        )
+        ).beta
         return pd.DataFrame(
             {"replicate": [int(batch["replicate"].iloc[0])], "beta_x1": [beta[0]]}
         )
@@ -183,7 +183,7 @@ def test_jk_refit_grouped_cox_matches_dense(spark):
             kept["t"].to_numpy(),
             kept["d"].to_numpy(),
             kept["w"].to_numpy() * 4 / 3,
-        )
+        ).beta
         assert got.loc[k, "beta_x1"] == pytest.approx(beta[0], abs=1e-9)
     # weight rescale is a no-op for Cox point estimates (scale-invariant
     # partial likelihood) but the plumbing must still apply it.

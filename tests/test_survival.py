@@ -254,6 +254,11 @@ def test_cox_fit_weighted_breslow(spark):
     assert cox_score_norm(spark.createDataFrame(pdf), ["x1", "x2"], [0.0, 0.0]) > 1.0
 
 
+def test_cox_fit_weighted_breslow_distributed(spark, distributed):
+    """The same golden on the distributed Newton loop."""
+    test_cox_fit_weighted_breslow(spark)
+
+
 def test_hazard_grid_auto_routes_huge_grids(spark, monkeypatch):
     """grid_partitions='auto' (the default) keeps the window for small
     grids and switches to the two-pass cumsum — same values — once the
