@@ -7,6 +7,14 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+# Heap of the test JVM (and of any JVM a test starts in a subprocess).
+# The engine's 16g default is sized for bench runs; on a 16 GB machine
+# the test JVM grew to 15.4 GB resident under it and was ended by the
+# kernel's OOM killer partway through the suite.  The tests run on
+# sf0.001-sized inputs; 4g is what surveybench pins as well.  Set before
+# ``session`` is imported, which reads it at import time.
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
+
 from data_integration_with_pseudoweights_and_survey_calibration_spark.session import get_spark  # noqa: E402
 
 
